@@ -133,8 +133,9 @@ def rectify_dataset(
 
     # coordinate images become (or stay) a distributed pixel DataFrame from
     # here on: every downstream step (CRS transform, pre-downscale, scatter)
-    # operates on the cluster-resident coords -- no driver round-trips, no
-    # .collect() anywhere below (the scale path a 100-TB swath needs)
+    # operates on the cluster-resident coords -- no driver round-trips; the
+    # only plan-time Spark job below is the CRS-transform route's grid-stats
+    # aggregation over the transformed coords (the same-CRS route has none)
     if isinstance(source_gm, GridMappingDF):
         gm_df = source_gm
     else:
@@ -176,15 +177,12 @@ def rectify_dataset(
 
     # pre-downscale when the source is finer than the target
     # (reference rectify.py:136-143, 234-260)
-    source_ds, gm_df = _downscale_source_dataset(
+    source_ds, coords_df, (src_w, src_h) = _downscale_source_dataset(
         source_ds, gm_df, target_gm,
         interp_methods, agg_methods, recover_nans,
     )
-    source_gm = gm_df
 
-    w, h = target_gm.size
-    src_w, src_h = source_gm.size
-    yx_dims = (source_gm.xy_dim_names[1], source_gm.xy_dim_names[0])
+    yx_dims = (gm_df.xy_dim_names[1], gm_df.xy_dim_names[0])
     # fall back to the dataset's own yx dims (coord-derived names can
     # legitimately differ from the data variables' dim names)
     ds_yx = source_ds.yx_dims
@@ -203,7 +201,7 @@ def rectify_dataset(
             # interpolated values; FWW + densify in the second kernel) --
             # equivalence-tested against scatter_from_coords + gather_var,
             # strictly fewer shuffles per variable action
-            fused = fuse_coords_values(gm_df.coords, var.df, num_t)
+            fused = fuse_coords_values(coords_df, var.df, num_t)
             df = rectify_fused_tiled(
                 fused, target_gm, (src_w, src_h), num_t, interp, fill,
                 is_int_dtype(var.dtype), UV_DELTA,
@@ -217,7 +215,7 @@ def rectify_dataset(
     coords = {
         k: v
         for k, v in source_ds.coords.items()
-        if k not in source_gm.xy_var_names
+        if k not in gm_df.xy_var_names
         and k not in ("lon", "lat", "spatial_ref")
     }
     coords.update(tcoords)
@@ -1372,17 +1370,19 @@ def _downscale_source_dataset(
     interp_methods,
     agg_methods,
     recover_nans,
-) -> tuple[SparkDataset, GridMappingDF]:
+) -> tuple[SparkDataset, DataFrame, tuple[int, int]]:
     """Affine-downscale data vars AND 2-D coordinate images when the source
     is finer than the target (reference rectify.py:234-260; the reference
     resamples the coord arrays through the same pipeline because they are
-    (y, x) variables of the dataset).  The coord images stay distributed:
-    the downscaled grid's stats (res/bbox/orientation) are re-derived by
-    aggregation, never collected."""
+    (y, x) variables of the dataset).  Returns the dataset, the lazy
+    (j, i, x, y) coords and the source size, unchanged when no downscale
+    is needed.  Derives no grid stats, so starts no Spark job: the target
+    is fixed already, the scatter reads only coords and size, and window
+    means of the (already antimeridian-normalized) lons stay continuous."""
     x_scale = gm_df.x_res / target_gm.x_res
     y_scale = gm_df.y_res / target_gm.y_res
     if not (x_scale < SCALE_LIMIT or y_scale < SCALE_LIMIT):
-        return source_ds, gm_df
+        return source_ds, gm_df.coords, gm_df.size
     w = round(x_scale * gm_df.width)
     h = round(y_scale * gm_df.height)
     downscaled_size = (w if w >= 2 else 2, h if h >= 2 else 2)
@@ -1427,8 +1427,4 @@ def _downscale_source_dataset(
         ),
         ["j", "i"],
     )
-    new_gm = GridMappingDF.from_coords_df(
-        new_coords, gm_df.crs, size=downscaled_size,
-        tile_size=gm_df.tile_size,
-    )
-    return out, new_gm
+    return out, new_coords, downscaled_size

@@ -337,21 +337,60 @@ class TestGatherFused:
         assert out.filter(F.isnan("value")).count() == 16
 
 
-def test_gather_fused_single_shuffle_plan(spark):
+@pytest.mark.parametrize("interp, agg", [
+    (0, "mean"),     # direct gather
+    (1, "mean"),     # kernel window reduction
+    (1, "count"),
+    (1, "center"),   # positional subpixel
+    (1, "std"),      # dense intermediate + aggregate_windows
+])
+def test_resample_pixels_wide_matches_long(spark, interp, agg):
+    """The internal wide layout carries plane t of the long result in
+    column ``wide[t]``, one row per target pixel, on every route."""
+    import pandas as pd
+
+    from xcube_resampling_spark.operators.affine import resample_pixels
+
+    rng = np.random.default_rng(5)
+    tt, jj, ii = np.meshgrid(
+        np.arange(3), np.arange(10), np.arange(12), indexing="ij"
+    )
+    val = rng.normal(size=tt.shape)
+    val[1, 2:4, 2:4] = np.nan  # one all-NaN 2 x 2 window
+    src = spark.createDataFrame(pd.DataFrame({
+        "t": tt.ravel().astype("int32"), "j": jj.ravel().astype("int32"),
+        "i": ii.ravel().astype("int32"), "value": val.ravel(),
+    }))
+    args = (spark, src, ((2.0, 0, 0), (0, 2.0, 0)), (12, 10), (6, 5), 3,
+            interp, agg, False, float("nan"), False)
+    long = resample_pixels(*args).toPandas().pivot(
+        index=["j", "i"], columns="t", values="value")
+    wide = resample_pixels(*args, wide=["a", "b", "c"]).toPandas() \
+        .set_index(["j", "i"]).sort_index()
+    assert len(wide) == 6 * 5
+    np.testing.assert_array_equal(
+        wide[["a", "b", "c"]].to_numpy(), long.sort_index().to_numpy()
+    )
+
+
+@pytest.mark.parametrize("num_t", [1, 3])
+def test_gather_fused_single_shuffle_plan(spark, num_t):
     """The fused gather's physical plan contains exactly ONE exchange (the
-    block bucketing) -- the design contract vs the explode-join's three."""
+    block bucketing) -- the design contract vs the explode-join's three.
+    A multi-slice input routes its long rows as they are: no pivot
+    exchange."""
     from pyspark.sql import functions as F
 
     from xcube_resampling_spark.operators.affine import gather_fused
 
-    src = spark.range(100).select(
-        F.lit(0).cast("int").alias("t"),
-        (F.col("id") / 10).cast("int").alias("j"),
+    src = spark.range(100 * num_t).select(
+        (F.col("id") / 100).cast("int").alias("t"),
+        (F.col("id") % 100 / 10).cast("int").alias("j"),
         (F.col("id") % 10).cast("int").alias("i"),
         F.rand(1).alias("value"),
     )
     out = gather_fused(
-        spark, src, (0.5, 0.0, 0.5, 0.0), (10, 10), (20, 20), 1, 1,
+        spark, src, (0.5, 0.0, 0.5, 0.0), (10, 10), (20, 20), num_t, 1,
         False, float("nan"),
     )
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -318,6 +318,16 @@ class TestMalformed:
         with pytest.raises(ValueError, match="truncated"):
             _full_box(b"\x00\x00\x00\x08stts", 8)
 
+    def test_corrupt_stts_run_count_raises_before_expanding(self):
+        # the corruption that made the truncation sweep below allocate
+        # 14.4 GiB: one stts run claiming 1,937,011,636 samples (stts
+        # layout: fourcc, ver/flags, entry count, then (count, delta))
+        bad = bytearray(build_mp4(_samples(6)))
+        idx = bad.find(b"stts")
+        struct.pack_into(">I", bad, idx + 12, 1_937_011_636)
+        with pytest.raises(ValueError, match="stts runs claim"):
+            parse_mp4_samples(bytes(bad))
+
     def test_truncation_sweep_never_escapes_contract(self):
         # every prefix of a real file must either parse or raise one
         # of the demux-catchable types -- the degrade-to-error-row

@@ -1,10 +1,11 @@
-"""Per-t presence encoding of the three fused kernels.
+"""Per-t presence of the three fused kernels, at 63 t-slices.
 
-Up to 62 t-slices, a pixel's per-slice presence travels through the
-routing shuffle as one bit-packed int64; above that, each slice gets its
-own boolean column.  A 63-slice input takes the unpacked fallback; its
-output must equal the packed result of the same slices (0..61 as one
-62-slice call, 62 as a one-slice call).
+Rectify and reproject ship a pixel's per-slice presence through their
+routing shuffle as one bit-packed int64 up to 62 t-slices; above that,
+each slice gets its own boolean column.  Affine packs no presence: it
+routes long (t, j, i, value) rows and drops NULL values before its
+shuffle.  Each operator's 63-slice output must equal its result for the
+same slices split into a 62-slice and a one-slice call.
 """
 
 import numpy as np

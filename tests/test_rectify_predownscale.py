@@ -3,12 +3,13 @@
 A source finer than its target (resolution ratio < SCALE_LIMIT) is
 downscaled, values and 2-D coordinate images together, before the
 scatter.  These tests pin the outputs of that route with golden
-checksums, count the Spark jobs ``resample_in_space`` runs before any
-output is requested, and cover swath sizes whose downscaled coordinates
-carry a NaN edge row/column.
+checksums and the exchanges of its plan, count the Spark jobs
+``resample_in_space`` runs before any output is requested, and cover
+swath sizes whose downscaled coordinates carry a NaN edge row/column.
 """
 
 import hashlib
+import re
 import uuid
 
 import numpy as np
@@ -35,11 +36,18 @@ def _swath(w, h, lon0=0.0, nt=0):
     return lon, lat, dims, values
 
 
-def _dataset(spark, w, h, lon0=0.0, nt=0):
+def _dataset(spark, w, h, lon0=0.0, nt=0, dtype=None, second_var=False):
+    """``dtype`` scales ``rtoa`` by 1000 and casts it; ``second_var``
+    adds a float64 ``rdif`` that is not a multiple of ``rtoa``."""
     lon, lat, dims, values = _swath(w, h, lon0, nt)
+    data_vars = {"rtoa": (dims, values)}
+    if dtype is not None:
+        data_vars["rtoa"] = (dims, np.round(values * 1000).astype(dtype))
+    if second_var:
+        data_vars["rdif"] = (dims, np.cos(values) * lat)
     return SparkDataset.from_numpy(
         spark,
-        data_vars={"rtoa": (dims, values)},
+        data_vars=data_vars,
         coords={"lon": lon, "lat": lat},
         yx_dims=("y", "x"),
     )
@@ -69,27 +77,44 @@ SCENE_TARGET = ((228, 158), (0.0, 58.5), 0.0125, 4326)
 UTM31 = 32631
 
 # input -> (swath w, h, lon0, nt), target (size, xy_min, res, EPSG),
-# interp_methods
+# resample_in_space keyword arguments, extra _dataset arguments
 CASES = {
-    "scene_nearest": ((240, 150, 0.0, 0), SCENE_TARGET, "nearest"),
-    "scene_default": ((240, 150, 0.0, 0), SCENE_TARGET, None),
+    "scene_nearest": ((240, 150, 0.0, 0), SCENE_TARGET,
+                      {"interp_methods": "nearest"}, {}),
+    "scene_default": ((240, 150, 0.0, 0), SCENE_TARGET, {}, {}),
     "antimeridian": ((160, 100, 179.3, 0),
-                     ((168, 120), (179.2, 58.9), 0.0125, 4326), None),
+                     ((168, 120), (179.2, 58.9), 0.0125, 4326), {}, {}),
     "stack_3d": ((120, 80, 0.0, 3),
-                 ((116, 86), (0.0, 59.15), 0.0125, 4326), None),
+                 ((116, 86), (0.0, 59.15), 0.0125, 4326), {}, {}),
     # CRS-transform route: lon/lat swath -> UTM 31N at 1500 m
     "utm_target": ((60, 40, 0.0, 0),
-                   ((27, 38), (332000.0, 6611000.0), 1500.0, UTM31), None),
+                   ((27, 38), (332000.0, 6611000.0), 1500.0, UTM31),
+                   {}, {}),
+    # the value is nearest; the coordinates fall back to bilinear + mean
+    "per_name_nearest": ((240, 150, 0.0, 0), SCENE_TARGET,
+                         {"interp_methods": {"rtoa": "nearest"}}, {}),
+    # int defaults (nearest, center) differ from the coordinates'
+    "int16": ((240, 150, 0.0, 0), SCENE_TARGET, {}, {"dtype": "int16"}),
+    "two_vars": ((240, 150, 0.0, 0), SCENE_TARGET, {},
+                 {"second_var": True}),
+    # std takes the dense window aggregation; the coordinates keep mean
+    "per_name_std": ((240, 150, 0.0, 0), SCENE_TARGET,
+                     {"agg_methods": {"rtoa": "std"}}, {}),
 }
 
 # Recorded before rectify's pre-downscale stopped estimating grid
-# statistics for the downscaled coordinates.
+# statistics for the downscaled coordinates (the first five), and before
+# it routed values and coordinates through one affine pass (the rest).
 GOLDEN = {
     "scene_nearest": "f8d3dd0c598af22c",
     "scene_default": "ad34b76a77af80a0",
     "antimeridian": "f46d85315c668e64",
     "stack_3d": "c1c77b16e0e150e8",
     "utm_target": "474baf4bcb030f0c",
+    "per_name_nearest": "b92594d8ddf1a786",
+    "int16": "6541301bc4893e39",
+    "two_vars": "cf600ce39f17bd20",
+    "per_name_std": "06fe8609099eb599",
 }
 
 
@@ -99,16 +124,28 @@ def _target(size, xy_min, res, epsg):
 
 
 def _run_case(spark, case):
-    (w, h, lon0, nt), target, interp = CASES[case]
+    (w, h, lon0, nt), target, kwargs, data = CASES[case]
     return resample_in_space(
-        _dataset(spark, w, h, lon0, nt), _target(*target),
-        interp_methods=interp,
+        _dataset(spark, w, h, lon0, nt, **data), _target(*target),
+        **kwargs,
     )
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_golden_checksums(spark, case):
     assert _checksum(_run_case(spark, case)) == GOLDEN[case]
+
+
+def test_scene_nearest_plan_exchanges(spark):
+    """Values and both coordinate planes share one affine pass, whose
+    kernel emits the scatter input: one affine exchange plus rectify's
+    two, and no join."""
+    out = _run_case(spark, "scene_nearest")
+    plan = out.data_vars["rtoa"].df._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", plan)) == 3
+    for node in ("BroadcastExchange", "BroadcastHashJoin", "SortMergeJoin"):
+        assert node not in plan
 
 
 def _plan_jobs(spark, fn):
@@ -145,7 +182,7 @@ class TestPlanTimeJobs:
         assert out.data_vars["rtoa"].df.count() == 228 * 158
 
     def test_crs_transform_route_job_count(self, spark):
-        (w, h, lon0, nt), target, _ = CASES["utm_target"]
+        (w, h, lon0, nt), target, _, _ = CASES["utm_target"]
         ds = _dataset(spark, w, h, lon0, nt)
         target_gm = _target(*target)
         _, n_jobs = _plan_jobs(

@@ -117,6 +117,17 @@ def _full_box(data: bytes, body: int):
     return ver, flags, body + 4
 
 
+def _repeat_runs(box: str, values, counts, data: bytes) -> np.ndarray:
+    """Expand (count, value) sample runs into per-sample values.  A file
+    holds fewer samples than bytes, so a larger run total is corrupt and
+    must not size the array."""
+    total = int(counts.sum())
+    if total > len(data):
+        raise ValueError(
+            f"{box} runs claim {total} samples in a {len(data)}-byte file")
+    return np.repeat(values, counts)
+
+
 def _parse_stbl(data: bytes, start: int, end: int) -> dict:
     """Decode one track's sample tables into dense per-sample arrays."""
     t: dict = {}
@@ -127,7 +138,7 @@ def _parse_stbl(data: bytes, start: int, end: int) -> dict:
             runs = struct.unpack_from(f">{2 * n}I", data, q + 4)
             counts = np.asarray(runs[0::2], dtype=np.int64)
             deltas = np.asarray(runs[1::2], dtype=np.int64)
-            t["deltas"] = np.repeat(deltas, counts)
+            t["deltas"] = _repeat_runs("stts", deltas, counts, data)
         elif b == b"ctts":
             ver, _, q = _full_box(data, p)
             (n,) = struct.unpack_from(">I", data, q)
@@ -139,7 +150,7 @@ def _parse_stbl(data: bytes, start: int, end: int) -> dict:
                 fmt = ">i" if ver == 1 else ">I"
                 o, = struct.unpack_from(fmt, data, q + 8 + 8 * k)
                 counts[k], offs[k] = c, o
-            t["ctts"] = np.repeat(offs, counts)
+            t["ctts"] = _repeat_runs("ctts", offs, counts, data)
         elif b == b"stsc":
             _, _, q = _full_box(data, p)
             (n,) = struct.unpack_from(">I", data, q)
@@ -152,6 +163,10 @@ def _parse_stbl(data: bytes, start: int, end: int) -> dict:
             _, _, q = _full_box(data, p)
             fixed, n = struct.unpack_from(">II", data, q)
             if fixed:
+                if n * fixed > len(data):
+                    raise ValueError(
+                        f"stsz claims {n} samples of {fixed} bytes in a "
+                        f"{len(data)}-byte file")
                 t["sizes"] = np.full(n, fixed, dtype=np.int64)
             else:
                 t["sizes"] = np.asarray(

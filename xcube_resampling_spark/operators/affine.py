@@ -1,4 +1,4 @@
-"""Affine resampling between regular grids sharing a CRS -- pure Spark SQL.
+"""Affine resampling between regular grids sharing a CRS.
 
 Parity reference: /root/reference/xcube_resampling/affine.py:52-362.
 The reference maps each target pixel to fractional source array coordinates
@@ -7,21 +7,16 @@ or 1 (bilinear) with ``dask_image.ndinterp.affine_transform``; downscaling
 first upsamples by a residual factor, then reduces k x k windows with
 ``da.coarsen`` (affine.py:277-313).
 
-Here the same semantics are expressed relationally, with no UDFs:
-
-* the target grid is generated distributed (``spark.range``),
-* fractional source coordinates are column arithmetic
-  (``src_if = i_scale * i + i_off``),
-* the gather is a single equi-join against the source pixel table
-  (1 neighbor for nearest, 4 exploded neighbors + pivot for bilinear),
-* out-of-bounds semantics replicate scipy's ``mode="constant"``:
-  a coordinate outside ``[0, n-1]`` yields the fill value; an interior
-  coordinate blends ``v0 + f*(v1-v0)``, which propagates data NaNs even at
-  zero weight exactly like the spline evaluation does,
-* downscale = the same gather on a k-times finer intermediate grid followed
-  by a ``GROUP BY (j div k, i div k)`` window aggregation (coarsen.py here),
-  with positional reducers (first/last/center) short-circuited to a single
-  gathered subpixel per output pixel -- no shuffle, no window blow-up.
+Each target pixel maps to fractional source coordinates by column
+arithmetic, and :func:`gather_fused` evaluates the order-0/1 spline in one
+block kernel behind one shuffle, replicating scipy's ``mode="constant"``: a
+coordinate outside ``[0, n-1]`` yields the fill value; an interior one
+blends ``v0 + f*(v1-v0)``, which propagates data NaNs even at zero weight.
+Downscale gathers a k-times finer grid and reduces its k x k windows, in
+the kernel for mean/sum/min/max/count and with ``aggregate_windows``
+otherwise; positional reducers (first/last/center) gather one subpixel per
+output pixel.  :func:`_gather`, the same gather as a SQL join, is kept as
+the tests' reference.
 """
 
 from __future__ import annotations
@@ -38,6 +33,7 @@ from .coarsen import POSITIONAL_METHODS, aggregate_windows, position_for
 from .utils import (
     num_t as num_t_of,
     can_apply_affine_transform,
+    check_pixel_key_bound,
     get_agg_method,
     get_fill_value,
     get_interp_method_int,
@@ -130,22 +126,7 @@ def resample_dataset(
             new_vars[name] = var.with_df(df)
         elif yx_dims[0] not in var.dims and yx_dims[1] not in var.dims:
             new_vars[name] = var
-    # carry non-spatial coords (e.g. time axis); drop spatial axes and any
-    # 2-D coordinate images (they no longer match the resampled grid)
-    import numpy as _np
-
-    def _is_spatial_coord(k, v):
-        if k in dataset.yx_dims or k == "spatial_ref":
-            return True
-        if any(k == f"{d}_bnds" for d in dataset.yx_dims):
-            return True
-        return isinstance(v, _np.ndarray) and v.ndim == 2
-
-    coords = {
-        k: v
-        for k, v in dataset.coords.items()
-        if not _is_spatial_coord(k, v)
-    }
+    coords = non_spatial_coords(dataset)
     return SparkDataset(
         spark=dataset.spark,
         data_vars=new_vars,
@@ -156,6 +137,20 @@ def resample_dataset(
         attrs=dict(dataset.attrs),
         yx_dims=yx_dims,
     )
+
+
+def non_spatial_coords(dataset: SparkDataset) -> dict:
+    """The coords a resampled dataset carries (e.g. a time axis): not the
+    spatial axes, their bounds, ``spatial_ref`` or any 2-D coordinate
+    image (they no longer match the resampled grid)."""
+    import numpy as np
+
+    yx = dataset.yx_dims
+    spatial = {*yx, *(f"{d}_bnds" for d in yx), "spatial_ref"}
+    return {
+        k: v for k, v in dataset.coords.items()
+        if k not in spatial and not (isinstance(v, np.ndarray) and v.ndim == 2)
+    }
 
 
 def resample_pixels(
@@ -170,9 +165,11 @@ def resample_pixels(
     recover_nan: bool,
     fill_value,
     is_int: bool,
+    wide: list[str] | None = None,
 ) -> DataFrame:
     """Long-format pixel resampling through a target->source affine matrix
-    (reference affine.py:243-313)."""
+    (reference affine.py:243-313).  ``wide`` (a list of ``num_t`` plane
+    names) returns one row (j, i, *wide) per target pixel instead."""
     ((i_scale, _b, i_off), (_d, j_scale, j_off)) = affine_matrix
     # Snap near-integer matrix entries: the composition of two grid
     # transforms is mathematically exact for grid-aligned cases, and
@@ -198,7 +195,7 @@ def resample_pixels(
             return gather_fused(
                 spark, src_df, adj, source_size, (w, h), num_t,
                 interp_method, recover_nan, fill_value,
-                idx_map=(k_j, k_i, pj, pi),
+                idx_map=(k_j, k_i, pj, pi), wide=wide,
             )
 
         # Kernel-fused window reduction for the distributive float
@@ -220,26 +217,35 @@ def resample_pixels(
                 num_t, interp_method, recover_nan, fill_value,
                 window_reduce=(k_j, k_i, agg_method),
             )
-            g = frag.groupBy("t", "j", "i")
-            wsz = float(k_j * k_i)
-            if agg_method == "mean":
-                # 0-present windows -> NaN, matching the dense path's
-                # coalesce(avg(nv), NaN); the CASE guard keeps ANSI
-                # mode's divide-by-zero check out of the 0-count branch
-                val = F.when(
-                    F.sum("cnt") > 0,
-                    F.sum("value") / F.sum("cnt").cast("double"),
-                ).otherwise(F.lit(float("nan")))
-            elif agg_method == "sum":
-                # np.nansum: empty fragments are 0.0, all-NaN -> 0.0
-                val = F.sum("value")
-            elif agg_method == "min":
-                val = F.coalesce(F.min("value"), F.lit(float("nan")))
-            elif agg_method == "max":
-                val = F.coalesce(F.max("value"), F.lit(float("nan")))
-            else:  # count = window_size - #zeros
-                val = F.lit(wsz) - F.sum("value")
-            return g.agg(val.alias("value"))
+
+            def merge(value, cnt):
+                if agg_method == "mean":
+                    # 0-present windows -> NaN, matching the dense path's
+                    # coalesce(avg(nv), NaN); the CASE guard keeps ANSI
+                    # mode's divide-by-zero check out of the 0-count
+                    # branch
+                    mean = F.sum(value) / F.sum(cnt).cast("double")
+                    return F.when(F.sum(cnt) > 0, mean).otherwise(
+                        F.lit(float("nan")))
+                if agg_method == "sum":
+                    # np.nansum: empty fragments are 0.0, all-NaN -> 0.0
+                    return F.sum(value)
+                if agg_method in ("min", "max"):
+                    ext = F.min if agg_method == "min" else F.max
+                    return F.coalesce(ext(value), F.lit(float("nan")))
+                # count = window_size - #zeros
+                return F.lit(float(k_j * k_i)) - F.sum(value)
+
+            if wide is None:
+                return frag.groupBy("t", "j", "i").agg(
+                    merge(F.col("value"), F.col("cnt")).alias("value")
+                )
+            # per-plane conditional aggregates: still one shuffle
+            at_t = [F.col("t") == k for k in range(num_t)]
+            return frag.groupBy("j", "i").agg(*[
+                merge(F.when(at, F.col("value")), F.when(at, F.col("cnt")))
+                .alias(name) for at, name in zip(at_t, wide)
+            ])
 
         # full intermediate grid (fused single-shuffle gather), then
         # window aggregation
@@ -253,13 +259,19 @@ def resample_pixels(
             "value",
         )
         out = aggregate_windows(gathered, agg_method, k_j, k_i, is_int)
-        return out.select(
-            "t", F.col("J").alias("j"), F.col("I").alias("i"), "value"
-        )
+        if wide is None:
+            return out.select(
+                "t", F.col("J").alias("j"), F.col("I").alias("i"), "value"
+            )
+        return out.groupBy(F.col("J").alias("j"), F.col("I").alias("i")) \
+            .agg(*[
+                F.max(F.when(F.col("t") == k, F.col("value"))).alias(name)
+                for k, name in enumerate(wide)
+            ])
 
     return gather_fused(
         spark, src_df, (i_scale, i_off, j_scale, j_off), source_size,
-        (w, h), num_t, interp_method, recover_nan, fill_value,
+        (w, h), num_t, interp_method, recover_nan, fill_value, wide=wide,
     )
 
 
@@ -432,8 +444,21 @@ def gather_fused(
     idx_map: tuple[int, int, int, int] = (1, 1, 0, 0),
     block_rows: int | None = None,
     window_reduce: tuple[int, int, str] | None = None,
+    wide: list[str] | None = None,
 ) -> DataFrame:
     """Single-shuffle block-local twin of :func:`_gather`.
+
+    Source rows (t, j, i, value) are routed as they come, one shuffle
+    row (sp, t, value, blk) each with ``sp = j * 2^31 + i``, to the
+    target j-blocks that can reference them (inverse-affine row range
+    +- slack -- a cheap superset, correctness lives in the kernel).
+    NULL values are dropped before the shuffle: NULL and absent both
+    read fill.  Each block fills its dense ``V[t, sj, si]`` and
+    evaluates the whole order-0/1 spline in one numpy pass: no neighbor
+    explode, no join, no pivot, no union for out-of-bounds rows.  Emits
+    the dense (t, j, i, value) grid; ``wide`` (a list of ``num_t``
+    column names) emits one row (j, i, *wide) per grid pixel instead,
+    plane t in column ``wide[t]``.
 
     ``window_reduce`` = (k_j, k_i, method) makes the kernel reduce each
     k_j x k_i window of its dense block in numpy and emit one partial
@@ -441,13 +466,8 @@ def gather_fused(
     WINDOW indices, and ``value``/``cnt`` are the per-fragment partial
     (NaN-aware sum + finite count for mean/sum, NULL-if-empty extremum
     for min/max, zero count for count).  The caller merges fragments of
-    boundary-straddling windows with a tiny groupBy.
-
-    Source pixels are routed to the target j-blocks that can reference them
-    (inverse-affine row range +- slack -- a cheap superset, correctness
-    lives in the kernel), then each block evaluates the whole order-0/1
-    spline in one numpy pass: no neighbor explode, no join, no pivot, no
-    union for out-of-bounds rows.  Emits the dense (t, j, i, value) grid.
+    boundary-straddling windows with a tiny groupBy (``wide`` does not
+    apply).
 
     ``idx_map`` = (k_j, k_i, p_j, p_i): grid row j samples gather row
     ``j * k_j + p_j`` (the positional-downscale shortcut); (1, 1, 0, 0) is
@@ -465,6 +485,7 @@ def gather_fused(
     import pandas as pd
     from pyspark.sql import types as T
 
+    check_pixel_key_bound(source_size)
     i_scale, i_off, j_scale, j_off = (float(v) for v in matrix4)
     src_w, src_h = source_size
     w, h = grid_size
@@ -485,50 +506,6 @@ def gather_fused(
     B = int(block_rows)
     n_blk = (h + B - 1) // B
 
-    # pivot values to wide per-t columns (rectify's fuse pattern: Arrow
-    # list columns cost per-row Python objects, wide columns are numpy
-    # views).  num_t == 1 is a pure projection -- no shuffle.
-    if num_t == 1:
-        vals = src_df.select(
-            "j", "i", F.col("value").alias("val_0"),
-        )
-    else:
-        vals = src_df.groupBy("j", "i").agg(
-            *[
-                F.max(F.when(F.col("t") == k, F.col("value")))
-                .alias(f"val_{k}")
-                for k in range(num_t)
-            ]
-        )
-    # Routing shuffle byte-packing (guide section 2.3, the rectify /
-    # reproject pattern): per-t presence booleans travel as ONE
-    # bit-packed int64 (bool-column fallback above 62 t-slices), and
-    # (j, i) travel as ONE packed int64 below -- each UnsafeRow
-    # fixed-width field is an 8-byte slot either way.
-    packed_pres = num_t <= 62
-    if packed_pres:
-        pres_cols = [
-            sum(
-                (
-                    F.when(F.col(f"val_{k}").isNotNull(),
-                           F.lit(1 << k).cast("bigint"))
-                    .otherwise(F.lit(0).cast("bigint"))
-                    for k in range(num_t)
-                ),
-                start=F.lit(0).cast("bigint"),
-            ).alias("pres")
-        ]
-    else:
-        pres_cols = [
-            F.col(f"val_{k}").isNotNull().alias(f"pres_{k}")
-            for k in range(num_t)
-        ]
-    vals = vals.select(
-        "j", "i",
-        *[F.col(f"val_{k}") for k in range(num_t)],
-        *pres_cols,
-    )
-
     # target-block routing: source row sj can be referenced by grid rows
     # whose src_jf lands within +-1.5 of it (nearest +-0.5, bilinear +-1,
     # plus slack); invert src_jf = j_scale * (j*k_j + p_j) + j_off
@@ -542,49 +519,44 @@ def gather_fused(
     g_hi = F.least(
         F.ceil((jj_hi - p_j) / k_j).cast("int"), F.lit(h - 1)
     )
-    routed = vals.filter(g_hi >= g_lo).select(
+    # Routing shuffle byte-packing (guide section 2.3, the rectify /
+    # reproject pattern): (j, i) travel as ONE packed int64 -- each
+    # UnsafeRow fixed-width field is an 8-byte slot either way
+    routed = src_df.filter(
+        F.col("value").isNotNull() & F.col("t").between(0, num_t - 1)
+        & (g_hi >= g_lo)
+    ).select(
         (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
          + F.col("i")).alias("sp"),
-        *[F.col(f"val_{k}") for k in range(num_t)],
-        *([F.col("pres")] if packed_pres
-          else [F.col(f"pres_{k}") for k in range(num_t)]),
+        "t", "value",
         F.explode(
             F.sequence(
                 (g_lo / B).cast("int"), (g_hi / B).cast("int")
             )
         ).alias("blk"),
     )
-    # sp = -1 marks the sentinel; non-NULL long literals keep the pandas
-    # sp / pres columns int64 (a NULL would widen them to float64, which
+    # sp = -1 marks the sentinel; a non-NULL long literal keeps the
+    # pandas sp column int64 (a NULL would widen it to float64, which
     # cannot represent a packed 62-bit key exactly)
     sentinels = spark.range(n_blk).select(
-        F.col("id").cast("int").alias("blk"),
         F.lit(-1).cast("bigint").alias("sp"),
-        *[
-            F.lit(None).cast("double").alias(f"val_{k}")
-            for k in range(num_t)
-        ],
-        *(
-            [F.lit(0).cast("bigint").alias("pres")] if packed_pres
-            else [
-                F.lit(None).cast("boolean").alias(f"pres_{k}")
-                for k in range(num_t)
-            ]
-        ),
+        F.lit(0).cast("int").alias("t"),
+        F.lit(None).cast("double").alias("value"),
+        F.col("id").cast("int").alias("blk"),
     )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("t", T.IntegerType(), False),
-            T.StructField("j", T.IntegerType(), False),
-            T.StructField("i", T.IntegerType(), False),
-            T.StructField("value", T.DoubleType(), True),
-        ]
-        + (
-            [T.StructField("cnt", T.LongType(), True)]
-            if window_reduce is not None else []
-        )
-    )
+    if window_reduce is not None:
+        out_cols = ["t", "j", "i", "value", "cnt"]
+    elif wide is not None:
+        out_cols = ["j", "i", *wide]
+    else:
+        out_cols = ["t", "j", "i", "value"]
+    idx_cols = ("t", "j", "i")
+    out_schema = T.StructType([
+        T.StructField(c, T.IntegerType(), False) if c in idx_cols
+        else T.StructField(c, T.LongType() if c == "cnt" else T.DoubleType())
+        for c in out_cols
+    ])
 
     def kernel(key, pdf):
         bb = int(key[0])
@@ -598,17 +570,9 @@ def gather_fused(
             sj_lo = int(sj_arr.min())
             sj_n = int(sj_arr.max()) - sj_lo + 1
             V = np.full((num_t, sj_n, src_w), fill)
-            if packed_pres:
-                pres_bits = real["pres"].to_numpy(np.int64)
-            for k in range(num_t):
-                v = real[f"val_{k}"].to_numpy(np.float64)
-                if packed_pres:
-                    p = ((pres_bits >> k) & 1).astype(bool)
-                else:
-                    p_raw = real[f"pres_{k}"].to_numpy()
-                    p = np.where(
-                        pd.isna(p_raw), False, p_raw).astype(bool)
-                V[k, sj_arr - sj_lo, si_arr] = np.where(p, v, fill)
+            V[real["t"].to_numpy(np.int64), sj_arr - sj_lo, si_arr] = (
+                real["value"].to_numpy(np.float64)
+            )
         else:
             sj_lo, sj_n = 0, 1
             V = np.full((num_t, 1, src_w), fill)
@@ -725,6 +689,14 @@ def gather_fused(
             np.arange(w, dtype=np.int32),
             indexing="ij",
         )
+        if wide is not None:
+            return pd.DataFrame(
+                {
+                    "j": (jj_out + j_start).ravel(),
+                    "i": ii_out.ravel(),
+                    **{name: out[k].ravel() for k, name in enumerate(wide)},
+                }
+            )
         return pd.DataFrame(
             {
                 "t": np.repeat(
@@ -750,6 +722,8 @@ def gather_fused(
     # the Arrow hop converts the kernel's NaN doubles to SQL NULLs (pandas
     # uses NaN as its null sentinel); _gather's contract is NaN and no
     # output is legitimately NULL, so restore
-    return out.withColumn(
-        "value", F.coalesce(F.col("value"), F.lit(float("nan")))
-    )
+    nan = F.lit(float("nan"))
+    return out.select(*[
+        c if c in idx_cols else F.coalesce(F.col(c), nan).alias(c)
+        for c in out_cols
+    ])

@@ -1,4 +1,4 @@
-"""Rectification of irregular (2-D coordinate) grids -- pure Spark SQL.
+"""Rectification of irregular (2-D coordinate) grids.
 
 Parity reference: /root/reference/xcube_resampling/rectify.py:54-773.
 The reference scans every source *quad* (4 adjacent swath pixels) with a
@@ -7,27 +7,33 @@ bbox, solves barycentric (u, v) per triangle and writes fractional source
 indices first-writer-wins (rectify.py:458-576); a second kernel gathers and
 interpolates source values (rectify.py:663-734).
 
-Spark-first formulation (no UDFs, no Numba):
+``rectify_dataset`` runs each variable through Arrow-batched numpy kernels
+behind Spark shuffles, with no join against the source table or a target
+grid:
 
-* quads are built from the per-pixel coordinate table with one ``lead()``
-  window (right neighbor) and one self-join (row below) -- a point-in-polygon
-  spatial join expressed as candidate generation + filter,
-* candidate target pixels come from ``explode(sequence(...))`` over the
-  quad's clamped pixel bbox,
-* the barycentric solve (dets ``_fdet/_fu/_fv``, tolerance UV_DELTA,
-  triangle A then B) is plain column arithmetic (rectify.py:530-573),
-* first-writer-wins becomes ``min_by(src_ij, (quad_j, quad_i, triangle))`` --
-  the reference's sequential scan order made deterministic under parallelism,
-* the gather is the same 4-neighbor equi-join as reproject, with
-  edge-clamped neighbors (rectify.py:695-727).
+* **pre-downscale** (source finer than the target, reference
+  rectify.py:234-260): one affine ``gather_fused`` pass over the union of
+  the variable's t-slices and the x / y coordinate planes emits the
+  scatter input (j, i, x, y, val_0..) directly (:func:`_downscale_fused`).
+  Otherwise :func:`fuse_coords_values` joins coordinates and values.
+* **scatter** (:func:`rectify_fused_tiled`, first shuffle): per source
+  j-block, rasterize each quad's candidate target pixels, solve
+  barycentric (u, v) per triangle (tolerance UV_DELTA, triangle A then B)
+  and emit the local first writer's interpolated values.
+* **densify** (second shuffle): per target j-block, global
+  first-writer-wins on the packed (j0, i0, triangle) rank -- the
+  reference's scan order made deterministic under parallelism -- then one
+  dense, fill-completed block.
 
-This replaces the reference's "slice the whole source array into every
-target block" gather (rectify.py:622-630) with a co-partitioned join -- the
-design note in SURVEY.md section 4 -- which is what makes the operator viable
-at 100 TB.
+The pure-SQL formulation (:func:`scatter_source_ij`,
+:func:`scatter_from_coords`, :func:`scatter_from_coords_tiled`,
+:func:`gather_var`: a ``lead()`` window, a self-join, ``min_by``) is not on
+this path; the tests and registry queries keep it as their reference.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -39,11 +45,15 @@ from ..constants import SCALE_LIMIT, UV_DELTA, is_int_dtype
 from ..dataset import SparkDataset, Variable, grid_df
 from ..gridmapping import GridMapping
 from ..gridmapping.distributed import GridMappingDF
-from .affine import resample_dataset
+from .affine import non_spatial_coords, resample_pixels
 from .utils import (
     num_t as num_t_of,
+    check_pixel_key_bound,
+    get_agg_method,
     get_fill_value,
+    get_interp_method_int,
     get_interp_method_str,
+    get_recover_nan,
     is_equal_crs,
     prep_interp_methods_downscale,
 )
@@ -177,10 +187,17 @@ def rectify_dataset(
 
     # pre-downscale when the source is finer than the target
     # (reference rectify.py:136-143, 234-260)
-    source_ds, coords_df, (src_w, src_h) = _downscale_source_dataset(
-        source_ds, gm_df, target_gm,
-        interp_methods, agg_methods, recover_nans,
-    )
+    x_scale = gm_df.x_res / target_gm.x_res
+    y_scale = gm_df.y_res / target_gm.y_res
+    downscale = x_scale < SCALE_LIMIT or y_scale < SCALE_LIMIT
+    src_coords = source_ds.coords
+    if downscale:
+        src_w = max(2, round(x_scale * gm_df.width))
+        src_h = max(2, round(y_scale * gm_df.height))
+        # as affine's resample_dataset: the 2-D images no longer match
+        src_coords = non_spatial_coords(source_ds)
+    else:
+        src_w, src_h = gm_df.size
 
     yx_dims = (gm_df.xy_dim_names[1], gm_df.xy_dim_names[0])
     # fall back to the dataset's own yx dims (coord-derived names can
@@ -201,7 +218,13 @@ def rectify_dataset(
             # interpolated values; FWW + densify in the second kernel) --
             # equivalence-tested against scatter_from_coords + gather_var,
             # strictly fewer shuffles per variable action
-            fused = fuse_coords_values(coords_df, var.df, num_t)
+            if downscale:
+                fused = _downscale_fused(
+                    name, var, num_t, gm_df, (x_scale, y_scale),
+                    (src_w, src_h), interp_methods, agg_methods, recover_nans,
+                )
+            else:
+                fused = fuse_coords_values(gm_df.coords, var.df, num_t)
             df = rectify_fused_tiled(
                 fused, target_gm, (src_w, src_h), num_t, interp, fill,
                 is_int_dtype(var.dtype), UV_DELTA,
@@ -214,7 +237,7 @@ def rectify_dataset(
     tcoords = target_gm.to_coords()
     coords = {
         k: v
-        for k, v in source_ds.coords.items()
+        for k, v in src_coords.items()
         if k not in gm_df.xy_var_names
         and k not in ("lon", "lat", "spatial_ref")
     }
@@ -987,6 +1010,7 @@ def rectify_fused_tiled(
     ``scatter_from_coords_tiled`` + ``gather_var`` (equivalence-tested,
     including NaN coords, missing pixels and u/v == 1.0 edges).
     """
+    check_pixel_key_bound(source_size)
     w, h = target_gm.size
     src_w, src_h = source_size
     x_min = float(target_gm.x_min)
@@ -1363,68 +1387,59 @@ def rectify_fused_tiled(
     )
 
 
-def _downscale_source_dataset(
-    source_ds: SparkDataset,
+def _downscale_fused(
+    name: str,
+    var: Variable,
+    num_t: int,
     gm_df: GridMappingDF,
-    target_gm: GridMapping,
+    scale: tuple[float, float],
+    size: tuple[int, int],
     interp_methods,
     agg_methods,
     recover_nans,
-) -> tuple[SparkDataset, DataFrame, tuple[int, int]]:
-    """Affine-downscale data vars AND 2-D coordinate images when the source
-    is finer than the target (reference rectify.py:234-260; the reference
-    resamples the coord arrays through the same pipeline because they are
-    (y, x) variables of the dataset).  Returns the dataset, the lazy
-    (j, i, x, y) coords and the source size, unchanged when no downscale
-    is needed.  Derives no grid stats, so starts no Spark job: the target
-    is fixed already, the scatter reads only coords and size, and window
-    means of the (already antimeridian-normalized) lons stay continuous."""
-    x_scale = gm_df.x_res / target_gm.x_res
-    y_scale = gm_df.y_res / target_gm.y_res
-    if not (x_scale < SCALE_LIMIT or y_scale < SCALE_LIMIT):
-        return source_ds, gm_df.coords, gm_df.size
-    w = round(x_scale * gm_df.width)
-    h = round(y_scale * gm_df.height)
-    downscaled_size = (w if w >= 2 else 2, h if h >= 2 else 2)
-
-    spark = source_ds.spark
-    yx = source_ds.yx_dims
-    t0 = F.lit(0).cast("int").alias("t")
-    combo_vars = dict(source_ds.data_vars)
-    combo_vars["__x__"] = Variable(
-        "__x__",
-        gm_df.coords.select(t0, "j", "i", F.col("x").alias("value")),
-        yx, "float64",
+) -> DataFrame:
+    """Affine-downscale one variable AND the 2-D coordinate images, as
+    the reference does (rectify.py:234-260), into the fused-scatter input
+    (j, i, x, y, val_0.., pres_0..).  Planes resolving the same downscale
+    parameters (the coordinates as float64 variables ``__x__``/``__y__``)
+    share ONE affine pass: their long rows, unioned without a shuffle,
+    go through one gather kernel that emits the wide (j, i, *planes)
+    grid.  Other planes (a per-name mapping, an int variable) take their
+    own pass, joined on (j, i).  Every pixel carries every plane, so
+    ``pres_k`` is true.  Starts no Spark job: the scatter reads only
+    coords and size, and window means of the (already
+    antimeridian-normalized) lons stay continuous."""
+    interp = prep_interp_methods_downscale(interp_methods)
+    vals = [f"val_{k}" for k in range(num_t)]
+    planes = [(name, var.dtype, vals, var.df.select("t", "j", "i", "value"))]
+    planes += [
+        (f"__{c}__", "float64", [c], gm_df.coords.select(
+            F.lit(0).alias("t"), "j", "i", F.col(c).alias("value")
+        ))
+        for c in ("x", "y")
+    ]
+    groups: dict[tuple, tuple[list[str], list[DataFrame]]] = {}
+    for key, dtype, names, df in planes:
+        params = (
+            get_interp_method_int(interp, key, dtype),
+            get_agg_method(agg_methods, key, dtype),
+            get_recover_nan(recover_nans, key, dtype),
+            get_fill_value(None, key, dtype),
+            is_int_dtype(dtype),
+        )
+        g_names, g_dfs = groups.setdefault(params, ([], []))
+        g_dfs.append(df.withColumn("t", F.col("t") + len(g_names)))
+        g_names.extend(names)
+    x_scale, y_scale = scale
+    parts = [
+        resample_pixels(
+            var.df.sparkSession, reduce(DataFrame.unionByName, dfs),
+            ((1 / x_scale, 0, 0), (0, 1 / y_scale, 0)), gm_df.size, size,
+            len(names), *params, wide=names,
+        )
+        for params, (names, dfs) in groups.items()
+    ]
+    return reduce(lambda a, b: a.join(b, ["j", "i"]), parts).select(
+        "j", "i", "x", "y", *vals,
+        *[F.lit(True).alias(f"pres_{k}") for k in range(num_t)],
     )
-    combo_vars["__y__"] = Variable(
-        "__y__",
-        gm_df.coords.select(t0, "j", "i", F.col("y").alias("value")),
-        yx, "float64",
-    )
-    combo = SparkDataset(
-        spark=spark,
-        data_vars=combo_vars,
-        coords=dict(source_ds.coords),
-        coord_attrs=dict(source_ds.coord_attrs),
-        attrs=dict(source_ds.attrs),
-        yx_dims=yx,
-    )
-    out = resample_dataset(
-        combo,
-        ((1 / x_scale, 0, 0), (0, 1 / y_scale, 0)),
-        yx,
-        downscaled_size,
-        gm_df.size,
-        prep_interp_methods_downscale(interp_methods),
-        agg_methods,
-        recover_nans,
-    )
-    new_coords = out.data_vars.pop("__x__").df.select(
-        "j", "i", F.col("value").alias("x")
-    ).join(
-        out.data_vars.pop("__y__").df.select(
-            "j", "i", F.col("value").alias("y")
-        ),
-        ["j", "i"],
-    )
-    return out, new_coords, downscaled_size

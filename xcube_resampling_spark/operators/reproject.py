@@ -36,6 +36,7 @@ from ..gridmapping import GridMapping
 from .affine import affine_transform_dataset
 from .utils import (
     num_t as num_t_of,
+    check_pixel_key_bound,
     get_fill_value,
     get_interp_method_str,
     prep_interp_methods_downscale,
@@ -509,6 +510,7 @@ def gather_interp_fused(
         raise NotImplementedError(
             f"{_NOT_IMPLEMENTED_ERROR}, was '{interp_method}'."
         )
+    check_pixel_key_bound(source_size)
     src_w, src_h = source_size
     fill = float(fill_value)
     if block_rows is None:

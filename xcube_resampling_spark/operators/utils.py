@@ -130,6 +130,15 @@ def num_t(dataset, var) -> int:
     return int(row.mt) + 1 if row.mt is not None else 1
 
 
+def check_pixel_key_bound(source_size: tuple[int, int]) -> None:
+    """Fused kernels route a source pixel by the int64 ``j * 2^31 + i``."""
+    if max(source_size) >= 1 << 31:
+        raise ValueError(
+            f"source size {tuple(source_size)} exceeds the 2^31 "
+            "pixel-key bound of the fused kernels"
+        )
+
+
 def prep_interp_methods_downscale(interp_methods):
     """triangular -> bilinear when downscaling
     (reference utils.py:239-251)."""

@@ -395,3 +395,60 @@ def test_gather_fused_single_shuffle_plan(spark, num_t):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
+
+
+@pytest.mark.parametrize("agg", ["min", "max"])
+def test_window_extremum_all_nan(spark, agg):
+    """A kernel window-reduce fragment with no finite value is NULL, so
+    the merge's F.min/F.max skip it (Spark ranks NaN above every
+    number).  Checked against numpy nanmin/nanmax of the dense
+    intermediate grid: an all-NaN window inside one kernel block, an
+    all-NaN window across a block boundary, and a window whose
+    upper-block half is all NaN."""
+    import warnings
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from xcube_resampling_spark.operators.affine import (
+        gather_fused,
+        resample_pixels,
+    )
+
+    src_w, src_h = 8, 66
+    jj, ii = np.meshgrid(np.arange(src_h), np.arange(src_w), indexing="ij")
+    val = np.random.default_rng(11).normal(size=jj.shape)
+    val[4:6, 4:6] = np.nan     # window (2, 2), inside a block
+    val[16:18, 2:4] = np.nan   # window (8, 1), rows 16 | 17
+    val[16, 6:8] = np.nan      # window (8, 3): upper half only
+    src = spark.createDataFrame(pd.DataFrame({
+        "t": np.zeros(jj.size, "int32"), "j": jj.ravel().astype("int32"),
+        "i": ii.ravel().astype("int32"), "value": val.ravel(),
+    }))
+    # 66 grid rows on 4 cores -> 17-row kernel blocks (rows 0..16, 17..)
+    assert spark.sparkContext.defaultParallelism == 4
+    dense = gather_fused(
+        spark, src, (1.0, 0.0, 1.0, 0.0), (src_w, src_h), (src_w, src_h),
+        1, 1, False, float("nan"),
+    ).toPandas().sort_values(["j", "i"])["value"].to_numpy()
+    windows = dense.reshape(src_h // 2, 2, src_w // 2, 2)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        want = getattr(np, f"nan{agg}")(windows, axis=(1, 3))
+    assert np.isnan(want[2, 2]) and np.isnan(want[8, 1])
+    assert np.isfinite(want[8, 3])
+
+    frags = gather_fused(
+        spark, src, (1.0, 0.0, 1.0, 0.0), (src_w, src_h), (src_w, src_h),
+        1, 1, False, float("nan"), block_rows=17,
+        window_reduce=(2, 2, agg),
+    )
+    empty = frags.filter(F.col("cnt") == 0)
+    assert empty.count() > 0
+    assert empty.filter(F.col("value").isNotNull()).count() == 0
+
+    got = resample_pixels(
+        spark, src, ((2.0, 0, 0), (0, 2.0, 0)), (src_w, src_h),
+        (src_w // 2, src_h // 2), 1, 1, agg, False, float("nan"), False,
+    ).toPandas().sort_values(["j", "i"])["value"].to_numpy()
+    np.testing.assert_array_equal(got.reshape(want.shape), want)

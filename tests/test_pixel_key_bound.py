@@ -38,7 +38,7 @@ def _rectify(spark):
 
     fused = _pixels(spark).select(
         "j", "i", F.col("value").alias("x"), F.lit(0.0).alias("y"),
-        F.col("value").alias("val_0"), F.lit(True).alias("pres_0"),
+        F.col("value").alias("val_0"),
     )
     tgm = GridMapping.regular((4, 4), (0.0, 0.0), 1.0, CRS_WGS84)
     rectify_fused_tiled(fused, tgm, TOO_WIDE)

@@ -1,11 +1,13 @@
 """Per-t presence of the three fused kernels, at 63 t-slices.
 
-Rectify and reproject ship a pixel's per-slice presence through their
-routing shuffle as one bit-packed int64 up to 62 t-slices; above that,
-each slice gets its own boolean column.  Affine packs no presence: it
-routes long (t, j, i, value) rows and drops NULL values before its
-shuffle.  Each operator's 63-slice output must equal its result for the
-same slices split into a 62-slice and a one-slice call.
+No operator encodes presence any more.  Affine and reproject route long
+(t, j, i, value) rows and drop NULL values before their shuffle; the
+rectify scatter reads a pixel's presence in slice k from the Arrow
+validity of its ``val_k`` column.  The 62 / 63 split is where a
+bit-packed int64 presence word used to give way to one boolean column
+per slice; it stays as a many-slice case with a NULL slice and a partly
+absent slice.  Each operator's 63-slice output must equal its result for
+the same slices split into a 62-slice and a one-slice call.
 """
 
 import numpy as np

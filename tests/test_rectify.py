@@ -583,7 +583,6 @@ def test_rectify_fused_two_shuffle_plan(spark):
         (F.col("id") % 10 * 1.0).alias("x"),
         (F.col("id") / 10 * 1.0).alias("y"),
         F.rand(1).alias("val_0"),
-        F.lit(True).alias("pres_0"),
     )
     tgm = GridMapping.regular((10, 10), (0.0, 0.0), 1.0, CRS_WGS84)
     out = rectify_fused_tiled(

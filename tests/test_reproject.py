@@ -433,20 +433,21 @@ class TestGatherInterpFused:
         assert same.all(), int((~same).sum())
 
 
-def test_gather_interp_fused_two_shuffle_plan(spark):
+@pytest.mark.parametrize("num_t", [1, 5])
+def test_gather_interp_fused_two_shuffle_plan(spark, num_t):
     """The cogrouped gather's physical plan contains exactly TWO exchanges
     (source rows and target-index rows each bucketed once by block) -- no
-    neighbor explode, no pivot shuffle."""
-    import pandas as pd
+    neighbor explode, and for a multi-slice source no pivot shuffle: its
+    long rows are routed as they are."""
     from pyspark.sql import functions as F
 
     from xcube_resampling_spark.operators.reproject import (
         gather_interp_fused,
     )
 
-    src = spark.range(100).select(
-        F.lit(0).cast("int").alias("t"),
-        (F.col("id") / 10).cast("int").alias("j"),
+    src = spark.range(100 * num_t).select(
+        (F.col("id") / 100).cast("int").alias("t"),
+        (F.col("id") % 100 / 10).cast("int").alias("j"),
         (F.col("id") % 10).cast("int").alias("i"),
         F.rand(1).alias("value"),
     )
@@ -457,7 +458,8 @@ def test_gather_interp_fused_two_shuffle_plan(spark):
         (F.col("id") / 8 * 1.2).alias("iy"),
     )
     out = gather_interp_fused(
-        grid2d, src, spark, (10, 10), 1, "bilinear", float("nan"), False
+        grid2d, src, spark, (10, 10), num_t, "bilinear", float("nan"),
+        False,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 2

@@ -9,14 +9,16 @@ first upsamples by a residual factor, then reduces k x k windows with
 
 Each target pixel maps to fractional source coordinates by column
 arithmetic, and :func:`gather_fused` evaluates the order-0/1 spline in one
-block kernel behind one shuffle, replicating scipy's ``mode="constant"``: a
-coordinate outside ``[0, n-1]`` yields the fill value; an interior one
-blends ``v0 + f*(v1-v0)``, which propagates data NaNs even at zero weight.
+numpy block kernel behind one shuffle (launched through ``blocks`` on Arrow
+tables), replicating scipy's ``mode="constant"``: a coordinate outside
+``[0, n-1]`` yields the fill value; an interior one blends
+``v0 + f*(v1-v0)``, which propagates data NaNs even at zero weight.
 Downscale gathers a k-times finer grid and reduces its k x k windows, in
 the kernel for mean/sum/min/max/count and with ``aggregate_windows``
 otherwise; positional reducers (first/last/center) gather one subpixel per
-output pixel.  :func:`_gather`, the same gather as a SQL join, is kept as
-the tests' reference.
+output pixel.  The kernel's NaNs reach Spark as NaN, never as NULL.
+:func:`_gather`, the same gather as a SQL join, is kept as the tests'
+reference.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from pyspark.sql import functions as F
 from ..constants import AffineTransformMatrix, is_int_dtype
 from ..dataset import SparkDataset, Variable, grid_df
 from ..gridmapping import GridMapping
+from . import blocks
 from .coarsen import POSITIONAL_METHODS, aggregate_windows, position_for
 from .utils import (
     num_t as num_t_of,
@@ -231,8 +234,11 @@ def resample_pixels(
                     # np.nansum: empty fragments are 0.0, all-NaN -> 0.0
                     return F.sum(value)
                 if agg_method in ("min", "max"):
+                    # empty fragments are NULL, so F.min/F.max skip them;
+                    # a window with no finite value -> NaN
                     ext = F.min if agg_method == "min" else F.max
-                    return F.coalesce(ext(value), F.lit(float("nan")))
+                    return F.when(F.sum(cnt) > 0, ext(value)).otherwise(
+                        F.lit(float("nan")))
                 # count = window_size - #zeros
                 return F.lit(float(k_j * k_i)) - F.sum(value)
 
@@ -448,9 +454,9 @@ def gather_fused(
 ) -> DataFrame:
     """Single-shuffle block-local twin of :func:`_gather`.
 
-    Source rows (t, j, i, value) are routed as they come, one shuffle
-    row (sp, t, value, blk) each with ``sp = j * 2^31 + i``, to the
-    target j-blocks that can reference them (inverse-affine row range
+    Source rows (t, j, i, value) are routed as they come
+    (``blocks.route_long``: one shuffle row (sp, t, value, blk) each), to
+    the target j-blocks that can reference them (inverse-affine row range
     +- slack -- a cheap superset, correctness lives in the kernel).
     NULL values are dropped before the shuffle: NULL and absent both
     read fill.  Each block fills its dense ``V[t, sj, si]`` and
@@ -482,7 +488,6 @@ def gather_fused(
     ``recover_nan`` renormalizes by the blended finite-mask.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     check_pixel_key_bound(source_size)
@@ -519,30 +524,9 @@ def gather_fused(
     g_hi = F.least(
         F.ceil((jj_hi - p_j) / k_j).cast("int"), F.lit(h - 1)
     )
-    # Routing shuffle byte-packing (guide section 2.3, the rectify /
-    # reproject pattern): (j, i) travel as ONE packed int64 -- each
-    # UnsafeRow fixed-width field is an 8-byte slot either way
-    routed = src_df.filter(
-        F.col("value").isNotNull() & F.col("t").between(0, num_t - 1)
-        & (g_hi >= g_lo)
-    ).select(
-        (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
-         + F.col("i")).alias("sp"),
-        "t", "value",
-        F.explode(
-            F.sequence(
-                (g_lo / B).cast("int"), (g_hi / B).cast("int")
-            )
-        ).alias("blk"),
-    )
-    # sp = -1 marks the sentinel; a non-NULL long literal keeps the
-    # pandas sp column int64 (a NULL would widen it to float64, which
-    # cannot represent a packed 62-bit key exactly)
-    sentinels = spark.range(n_blk).select(
-        F.lit(-1).cast("bigint").alias("sp"),
-        F.lit(0).cast("int").alias("t"),
-        F.lit(None).cast("double").alias("value"),
-        F.col("id").cast("int").alias("blk"),
+    routed = blocks.route_long(
+        src_df.filter(g_hi >= g_lo), num_t,
+        (g_lo / B).cast("int"), (g_hi / B).cast("int"),
     )
 
     if window_reduce is not None:
@@ -558,20 +542,19 @@ def gather_fused(
         for c in out_cols
     ])
 
-    def kernel(key, pdf):
-        bb = int(key[0])
+    def kernel(key, table):
+        bb = key[0].as_py()
         j_start = bb * B
         rows_h = min(B, h - j_start)
-        real = pdf[pdf["sp"].to_numpy() >= 0]
-        if len(real):
-            sp = real["sp"].to_numpy(np.int64)
-            sj_arr = sp >> 31
-            si_arr = sp & 0x7FFFFFFF
+        sp = blocks.read(table, "sp")[0]
+        real = sp >= 0
+        if real.any():
+            sj_arr, si_arr = blocks.unpack_ij(sp[real])
             sj_lo = int(sj_arr.min())
             sj_n = int(sj_arr.max()) - sj_lo + 1
             V = np.full((num_t, sj_n, src_w), fill)
-            V[real["t"].to_numpy(np.int64), sj_arr - sj_lo, si_arr] = (
-                real["value"].to_numpy(np.float64)
+            V[blocks.read(table, "t")[0][real], sj_arr - sj_lo, si_arr] = (
+                blocks.read(table, "value")[0][real]
             )
         else:
             sj_lo, sj_n = 0, 1
@@ -661,12 +644,11 @@ def gather_fused(
                 elif rmethod == "count":
                     # np.count_nonzero semantics: NaN != 0 counts
                     v = (sub == 0.0).sum(axis=(1, 3)).astype(np.float64)
-                else:  # min / max: NaN (-> SQL NULL) for empty windows
+                else:  # min / max; empty fragments are emitted NULL
                     big = np.inf if rmethod == "min" else -np.inf
                     ext = np.where(finite, sub, big)
                     v = (ext.min(axis=(1, 3)) if rmethod == "min"
                          else ext.max(axis=(1, 3)))
-                    v = np.where(c == 0, np.nan, v)
                 t_l.append(np.repeat(
                     np.arange(num_t, dtype=np.int32), w_out))
                 j_l.append(np.full(num_t * w_out, jv, dtype=np.int32))
@@ -674,15 +656,18 @@ def gather_fused(
                     np.arange(w_out, dtype=np.int32), num_t))
                 v_l.append(v.reshape(num_t * w_out))
                 c_l.append(c.reshape(num_t * w_out))
-            return pd.DataFrame(
-                {
-                    "t": np.concatenate(t_l),
-                    "j": np.concatenate(j_l),
-                    "i": np.concatenate(i_l),
-                    "value": np.concatenate(v_l),
-                    "cnt": np.concatenate(c_l),
-                }
-            )
+            cnt = np.concatenate(c_l)
+            value = np.concatenate(v_l)
+            return blocks.emit(out_schema, {
+                "t": np.concatenate(t_l),
+                "j": np.concatenate(j_l),
+                "i": np.concatenate(i_l),
+                # an empty min/max fragment must reach the merge's
+                # F.min/F.max as NULL: Spark ranks NaN above every number
+                "value": (value, cnt > 0) if rmethod in ("min", "max")
+                else value,
+                "cnt": cnt,
+            })
 
         jj_out, ii_out = np.meshgrid(
             np.arange(rows_h, dtype=np.int32),
@@ -690,40 +675,16 @@ def gather_fused(
             indexing="ij",
         )
         if wide is not None:
-            return pd.DataFrame(
-                {
-                    "j": (jj_out + j_start).ravel(),
-                    "i": ii_out.ravel(),
-                    **{name: out[k].ravel() for k, name in enumerate(wide)},
-                }
-            )
-        return pd.DataFrame(
-            {
-                "t": np.repeat(
-                    np.arange(num_t, dtype=np.int32), rows_h * w
-                ),
-                "j": np.tile((jj_out + j_start).ravel(), num_t),
-                "i": np.tile(ii_out.ravel(), num_t),
-                "value": out.reshape(num_t * rows_h * w),
-            }
-        )
+            return blocks.emit(out_schema, {
+                "j": (jj_out + j_start).ravel(),
+                "i": ii_out.ravel(),
+                **{name: out[k].ravel() for k, name in enumerate(wide)},
+            })
+        return blocks.emit(out_schema, {
+            "t": np.repeat(np.arange(num_t, dtype=np.int32), rows_h * w),
+            "j": np.tile((jj_out + j_start).ravel(), num_t),
+            "i": np.tile(ii_out.ravel(), num_t),
+            "value": out.reshape(num_t * rows_h * w),
+        })
 
-    # pin the kernel stage at exactly one partition per block (see the
-    # measured partition-count comparison in rectify.py's fused path:
-    # AQE byte-coalescing folds compute-heavy groups; hash at N = #keys
-    # beat both a 4x fan-out and repartitionByRange)
-    out = routed.unionByName(sentinels).repartition(
-        n_blk, "blk"
-    ).groupBy("blk").applyInPandas(kernel, out_schema)
-    if window_reduce is not None:
-        # fragment rows: NULL value legitimately means "empty window
-        # fragment" for min/max (the caller's F.min/F.max skip it)
-        return out
-    # the Arrow hop converts the kernel's NaN doubles to SQL NULLs (pandas
-    # uses NaN as its null sentinel); _gather's contract is NaN and no
-    # output is legitimately NULL, so restore
-    nan = F.lit(float("nan"))
-    return out.select(*[
-        c if c in idx_cols else F.coalesce(F.col(c), nan).alias(c)
-        for c in out_cols
-    ])
+    return blocks.launch(routed, n_blk, kernel, out_schema, sentinels=True)

@@ -7,19 +7,21 @@ bbox, solves barycentric (u, v) per triangle and writes fractional source
 indices first-writer-wins (rectify.py:458-576); a second kernel gathers and
 interpolates source values (rectify.py:663-734).
 
-``rectify_dataset`` runs each variable through Arrow-batched numpy kernels
-behind Spark shuffles, with no join against the source table or a target
-grid:
+``rectify_dataset`` runs each variable through numpy block kernels on
+Arrow tables (the ``blocks`` harness) behind Spark shuffles, with no join
+against the source table or a target grid:
 
 * **pre-downscale** (source finer than the target, reference
   rectify.py:234-260): one affine ``gather_fused`` pass over the union of
   the variable's t-slices and the x / y coordinate planes emits the
   scatter input (j, i, x, y, val_0..) directly (:func:`_downscale_fused`).
   Otherwise :func:`fuse_coords_values` joins coordinates and values.
+  A NULL ``val_k`` means "absent -> fill"; a NaN one is a value.
 * **scatter** (:func:`rectify_fused_tiled`, first shuffle): per source
   j-block, rasterize each quad's candidate target pixels, solve
   barycentric (u, v) per triangle (tolerance UV_DELTA, triangle A then B)
-  and emit the local first writer's interpolated values.
+  and emit the local first writer's interpolated values.  Presence is
+  read from each ``val_k`` column's Arrow validity.
 * **densify** (second shuffle): per target j-block, global
   first-writer-wins on the packed (j0, i0, triangle) rank -- the
   reference's scan order made deterministic under parallelism -- then one
@@ -45,6 +47,7 @@ from ..constants import SCALE_LIMIT, UV_DELTA, is_int_dtype
 from ..dataset import SparkDataset, Variable, grid_df
 from ..gridmapping import GridMapping
 from ..gridmapping.distributed import GridMappingDF
+from . import blocks
 from .affine import non_spatial_coords, resample_pixels
 from .utils import (
     num_t as num_t_of,
@@ -602,7 +605,7 @@ def scatter_from_coords_tiled(
     # each row belongs to block j//B and, if it is a block's first row, also
     # to the previous block (quad rows span two consecutive j values)
     b = F.floor(F.col("j") / block_rows).cast("int")
-    blocks = coords.select(
+    blocked = coords.select(
         "j", "i", "x", "y",
         F.explode(
             F.when(
@@ -762,7 +765,7 @@ def scatter_from_coords_tiled(
             }
         )
 
-    matches = blocks.groupBy("blk").applyInPandas(
+    matches = blocked.groupBy("blk").applyInPandas(
         lambda _, pdf: kernel(pdf), MATCH_SCHEMA
     )
     return matches.groupBy("dst_j", "dst_i").agg(
@@ -901,8 +904,7 @@ def gather_var(
 
 def _fused_match_schema(num_t: int) -> T.StructType:
     """Per-t values travel as WIDE double columns (val_0..val_{n-1}), not an
-    array column: Arrow list columns cost a Python object per row on the
-    pandas side, wide columns are zero-copy numpy views.
+    array column: each is one zero-copy numpy view in the kernel.
 
     Shuffle fewer bytes (guide section 2.3): the candidate shuffle is the
     bigger of the fused path's two exchanges (one row per surviving
@@ -948,9 +950,8 @@ def fuse_coords_values(
     A NULL val_k (value NULL, or the (t, j, i) row absent, or the whole
     pixel absent) means "-> fill" downstream, mirroring the inner-join +
     ``coalesce`` semantics of :func:`gather_var`; a NaN double is a genuine
-    value and propagates through interpolation.  The kernel reads NULL-ness
-    from JVM-computed ``pres_k`` booleans because the Arrow->pandas hop
-    collapses NULL and NaN.
+    value and propagates through interpolation.  The scatter kernel reads
+    NULL-ness from the Arrow validity of each val_k column.
     """
     if num_t == 1:
         v = values.select(
@@ -972,10 +973,6 @@ def fuse_coords_values(
     ).select(
         coords["j"], coords["i"], "x", "y",
         *[F.col(f"val_{k}") for k in range(num_t)],
-        *[
-            F.col(f"val_{k}").isNotNull().alias(f"pres_{k}")
-            for k in range(num_t)
-        ],
     )
 
 
@@ -1004,9 +1001,9 @@ def rectify_fused_tiled(
 
     Physical plan: one shuffle into source j-blocks (boundary rows j%B<2
     duplicated down so every owned quad sees rows qj..qj+2), one shuffle
-    into target j-blocks.  No join against the source table, no join
-    against a generated target grid -- both gathers happen inside
-    Arrow-batched numpy kernels.  Semantics are identical to
+    into target j-blocks, both launched through ``blocks``.  No join
+    against the source table, no join against a generated target grid --
+    both gathers happen inside the numpy kernels.  Semantics are identical to
     ``scatter_from_coords_tiled`` + ``gather_var`` (equivalence-tested,
     including NaN coords, missing pixels and u/v == 1.0 edges).
     """
@@ -1039,55 +1036,23 @@ def rectify_fused_tiled(
 
     match_schema = _fused_match_schema(num_t)
 
-    # Routing shuffle byte-packing (guide section 2.3, same shape as
-    # reproject's gather cogroup): (j, i) travel as ONE packed int64
-    # (both non-negative 32-bit, integer-exact, kernel decode is two
-    # shifts) and the per-t presence booleans as ONE bit-packed int64
-    # (bool-column fallback above 62 t-slices) -- each UnsafeRow
-    # fixed-width field is an 8-byte slot, so this is 1 + (num_t - 1)
-    # fewer words per routed source row.
-    packed_pres = num_t <= 62
+    # each row belongs to block j // B and, if it is one of a block's
+    # first two rows, also to the block above (a quad's stencil reaches
+    # rows qj..qj+2)
     b = F.floor(F.col("j") / B).cast("int")
-    if packed_pres:
-        pres_cols = [
-            sum(
-                (
-                    F.when(F.col(f"pres_{k}"),
-                           F.lit(1 << k).cast("bigint"))
-                    .otherwise(F.lit(0).cast("bigint"))
-                    for k in range(num_t)
-                ),
-                start=F.lit(0).cast("bigint"),
-            ).alias("pres")
-        ]
-    else:
-        pres_cols = [F.col(f"pres_{k}") for k in range(num_t)]
-    blocks = fused.select(
-        (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
-         + F.col("i")).alias("sp"),
-        "x", "y",
-        *[F.col(f"val_{k}") for k in range(num_t)],
-        *pres_cols,
-        F.explode(
-            F.when(
-                (F.col("j") % B < 2) & (F.col("j") >= B),
-                F.array(b, b - 1),
-            ).otherwise(F.array(b))
-        ).alias("blk"),
-    )
+    blk_lo = F.when((F.col("j") % B < 2) & (F.col("j") >= B), b - 1) \
+        .otherwise(b)
+    val_names = [f"val_{k}" for k in range(num_t)]
+    routed = blocks.route(fused, blk_lo, b, "x", "y", *val_names)
 
-    def scatter_kernel(key, pdf):
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {f.name: pd.Series(dtype=object) for f in match_schema.fields}
+    def scatter_kernel(key, table):
+        empty = blocks.emit(
+            match_schema, {f.name: np.empty(0) for f in match_schema.fields}
         )
-        if len(pdf) == 0:
+        if table.num_rows == 0:
             return empty
-        blk = int(key[0])
-        sp = pdf["sp"].to_numpy(np.int64)
-        j_arr = sp >> 31
-        i_arr = sp & 0x7FFFFFFF
+        blk = key[0].as_py()
+        j_arr, i_arr = blocks.unpack_ij(blocks.read(table, "sp")[0])
         j_lo, i_lo = j_arr.min(), i_arr.min()
         hh = int(j_arr.max() - j_lo + 1)
         ww = int(i_arr.max() - i_lo + 1)
@@ -1099,20 +1064,11 @@ def rectify_fused_tiled(
         # per-(t, pixel) presence: False = SQL NULL / absent row -> fill;
         # True with NaN in V = genuine NaN value -> propagates
         P = np.zeros((num_t, hh, ww), dtype=bool)
-        X[j_arr - j_lo, i_arr - i_lo] = pdf["x"].to_numpy(np.float64)
-        Y[j_arr - j_lo, i_arr - i_lo] = pdf["y"].to_numpy(np.float64)
-        if packed_pres:
-            pres_bits = pdf["pres"].to_numpy(np.int64)
-        for k in range(num_t):
-            V[k, j_arr - j_lo, i_arr - i_lo] = (
-                pdf[f"val_{k}"].to_numpy(np.float64)
-            )
-            if packed_pres:
-                p = ((pres_bits >> k) & 1).astype(bool)
-            else:
-                p_raw = pdf[f"pres_{k}"].to_numpy()
-                p = np.where(pd.isna(p_raw), False, p_raw).astype(bool)
-            P[k, j_arr - j_lo, i_arr - i_lo] = p
+        at = (j_arr - j_lo, i_arr - i_lo)
+        X[at] = blocks.read(table, "x")[0]
+        Y[at] = blocks.read(table, "y")[0]
+        for k, name in enumerate(val_names):
+            V[k][at], P[k][at] = blocks.read(table, name)
 
         p0x, p0y = X[:-1, :-1], Y[:-1, :-1]
         p1x, p1y = X[:-1, 1:], Y[:-1, 1:]
@@ -1296,94 +1252,51 @@ def rectify_fused_tiled(
             "rank": ((qj_k.astype(np.int64) * src_w + qi_k) * 2
                      + tri).astype(np.int64),
         }
-        for k in range(num_t):
-            out[f"val_{k}"] = vals[k]
-        return pd.DataFrame(out)
+        for k, name in enumerate(val_names):
+            out[name] = vals[k]
+        return blocks.emit(match_schema, out)
 
-    # Explicit repartition pinned to the exact group count: the kernel
-    # stages' cost is per-group numpy compute, not shuffle bytes, so
-    # AQE's byte-based coalescing (which folded 32 groups into 16 tasks
-    # at 10x scale -- half the cores idle) must not apply.  A
-    # user-specified partition count is exempt from AQE coalescing, and
-    # hashpartitioning(blk, N) satisfies the groupBy's required
-    # distribution, so this replaces (not adds to) the implicit
-    # exchange -- plan-asserted exchange counts stay [2, 2].
-    # Partition-count choice, all measured at 10x on local[32]:
-    # N = #keys hash (this) 9.0-12.7 s steady; 4N hash 14.3 s (empty-
-    # partition task + shuffle-fetch overhead); repartitionByRange(N)
-    # 22.9 s (its boundary-sampling pass re-executes the upstream
-    # transform).  Hash collisions at N = #keys serialize a couple of
-    # kernels on the busiest task in theory, but the alternatives'
-    # constant costs are larger in practice.
-    n_src_blk = max(1, (src_h + B - 1) // B)
-    matches = blocks.repartition(n_src_blk, "blk").groupBy(
-        "blk"
-    ).applyInPandas(scatter_kernel, match_schema)
-
-    # every target block must appear even if it drew no candidates -> union
-    # sentinel rows (dst_i = -1, ignored by the kernel) generated without
-    # driver memory
-    spark = fused.sparkSession
-    n_blk = (h + DB - 1) // DB
-    sentinels = spark.range(n_blk).select(
-        F.col("id").cast("int").alias("dst_blk"),
-        # pix = -1 marks the sentinel (a long-typed literal keeps the
-        # pandas column int64 -- never NULL, so no float64 widening)
-        F.lit(-1).cast("bigint").alias("pix"),
-        F.lit(0).cast("bigint").alias("rank"),
-        *[
-            F.lit(None).cast("double").alias(f"val_{k}")
-            for k in range(num_t)
-        ],
+    matches = blocks.launch(
+        routed, max(1, (src_h + B - 1) // B), scatter_kernel, match_schema
     )
 
-    def densify_kernel(key, pdf):
-        import pandas as pd
-
-        bb = int(key[0])
+    def densify_kernel(key, table):
+        bb = key[0].as_py()
         j_start = bb * DB
         rows_h = min(DB, h - j_start)
         out = np.full((num_t, rows_h, w), fill)
-        real = pdf[pdf["pix"].to_numpy() >= 0]
-        if len(real):
-            pix = real["pix"].to_numpy(np.int64)
+        pix = blocks.read(table, "pix")[0]
+        real = pix >= 0
+        if real.any():
+            pix = pix[real]
             djr = pix // w
             dir_ = pix - djr * w
             # global first-writer-wins across source blocks: min
             # (j0, i0, tri) per target pixel -- the shuffled rank IS
             # that packed key (see _fused_match_schema)
             win = _fww_keep(
-                pix, real["rank"].to_numpy(np.int64),
+                pix, blocks.read(table, "rank")[0][real],
                 int(w) * int(h), 2 * int(src_w) * int(src_h),
             )
-            for k in range(num_t):
+            for k, name in enumerate(val_names):
                 out[k, djr[win] - j_start, dir_[win]] = (
-                    real[f"val_{k}"].to_numpy(np.float64)[win]
+                    blocks.read(table, name)[0][real][win]
                 )
         jj, ii = np.meshgrid(
             np.arange(rows_h, dtype=np.int32), np.arange(w, dtype=np.int32),
             indexing="ij",
         )
-        return pd.DataFrame(
-            {
-                "t": np.repeat(
-                    np.arange(num_t, dtype=np.int32), rows_h * w
-                ),
-                "j": np.tile((jj + j_start).ravel(), num_t),
-                "i": np.tile(ii.ravel(), num_t),
-                "value": out.reshape(num_t * rows_h * w),
-            }
-        )
+        return blocks.emit(PIXEL_SCHEMA, {
+            "t": np.repeat(np.arange(num_t, dtype=np.int32), rows_h * w),
+            "j": np.tile((jj + j_start).ravel(), num_t),
+            "i": np.tile(ii.ravel(), num_t),
+            "value": out.reshape(num_t * rows_h * w),
+        })
 
-    out = matches.unionByName(sentinels).repartition(
-        n_blk, "dst_blk"
-    ).groupBy("dst_blk").applyInPandas(densify_kernel, PIXEL_SCHEMA)
-    # the Arrow hop converts the kernel's NaN doubles to SQL NULLs (pandas
-    # uses NaN as its null sentinel); the operator's contract is NaN --
-    # un-fused gather_var emits real NaNs -- and no output is legitimately
-    # NULL, so restore
-    return out.withColumn(
-        "value", F.coalesce(F.col("value"), F.lit(float("nan")))
+    # every target block runs its kernel, candidates or not (sentinels)
+    return blocks.launch(
+        matches, (h + DB - 1) // DB, densify_kernel, PIXEL_SCHEMA,
+        key="dst_blk", sentinels=True,
     )
 
 
@@ -1400,13 +1313,13 @@ def _downscale_fused(
 ) -> DataFrame:
     """Affine-downscale one variable AND the 2-D coordinate images, as
     the reference does (rectify.py:234-260), into the fused-scatter input
-    (j, i, x, y, val_0.., pres_0..).  Planes resolving the same downscale
+    (j, i, x, y, val_0..).  Planes resolving the same downscale
     parameters (the coordinates as float64 variables ``__x__``/``__y__``)
     share ONE affine pass: their long rows, unioned without a shuffle,
     go through one gather kernel that emits the wide (j, i, *planes)
     grid.  Other planes (a per-name mapping, an int variable) take their
-    own pass, joined on (j, i).  Every pixel carries every plane, so
-    ``pres_k`` is true.  Starts no Spark job: the scatter reads only
+    own pass, joined on (j, i).  Every pixel carries every plane, and
+    no ``val_k`` is NULL.  Starts no Spark job: the scatter reads only
     coords and size, and window means of the (already
     antimeridian-normalized) lons stay continuous."""
     interp = prep_interp_methods_downscale(interp_methods)
@@ -1441,5 +1354,4 @@ def _downscale_fused(
     ]
     return reduce(lambda a, b: a.join(b, ["j", "i"]), parts).select(
         "j", "i", "x", "y", *vals,
-        *[F.lit(True).alias(f"pres_{k}") for k in range(num_t)],
     )

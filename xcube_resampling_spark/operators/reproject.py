@@ -1,24 +1,26 @@
-"""CRS reprojection of regular grids -- Spark SQL + one vectorized UDF.
+"""CRS reprojection of regular grids.
 
 Parity reference: /root/reference/xcube_resampling/reproject.py:51-530.
 The reference transforms each target pixel center into the source CRS
 (pyproj), computes fractional source indices and gathers/interpolates
-per-tile with padded dense blocks.  Spark-first formulation:
+per-tile with padded dense blocks.  Here:
 
-* target pixel centers are generated distributed and transformed by a single
-  Arrow-batched pandas UDF (the only non-SQL step -- CRS math cannot be
-  expressed in Catalyst),
+* target pixel centers are generated distributed and transformed by one
+  Arrow-batched pandas UDF (CRS math cannot be expressed in Catalyst),
 * fractional source indices are column arithmetic against the source grid
   origin (identical to reproject.py:278-279),
-* the gather is an equi-join on (t, floor/ceil j, floor/ceil i); the
-  reference's per-tile padded blocks (reproject.py:499-530) are replaced by
-  per-neighbor bounds checks -> fill value, which avoids materializing dense
-  padded intermediates entirely (a genuine win at scale),
-* interpolation blends (nearest via banker's rounding like np.rint,
-  bilinear, two-triangle 'triangular') are whole-stage-codegen expressions
-  (reproject.py:281-328).
-* if the source is finer than the target (SCALE_LIMIT, reproject.py:338-382)
-  the source is first clipped (filter pushdown) and affine-downscaled.
+* :func:`gather_interp_fused` gathers and interpolates (nearest via
+  banker's rounding like np.rint, bilinear, two-triangle 'triangular';
+  reproject.py:281-328) in one numpy kernel per source j-block, cogrouped
+  through ``blocks`` on Arrow tables: source rows travel long, as
+  (sp, t, value, blk) with NULL values dropped, and target pixels as
+  (tp, ix, iy, blk) -- two shuffles,
+* if the source is finer than the target (``plans.plan_pre_downscale``,
+  reproject.py:338-382) the source is first clipped (filter pushdown) and
+  affine-downscaled.
+
+:func:`_gather_interp`, the same gather as an equi-join + pivot, is kept
+as the tests' reference.
 """
 
 from __future__ import annotations
@@ -29,10 +31,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..constants import SCALE_LIMIT, is_int_dtype
+from ..constants import is_int_dtype
 from ..crs import CRS, Transformer
 from ..dataset import SparkDataset, Variable, grid_df
 from ..gridmapping import GridMapping
+from ..plans import plan_pre_downscale
+from . import blocks
 from .affine import affine_transform_dataset
 from .utils import (
     num_t as num_t_of,
@@ -153,14 +157,11 @@ def reproject_dataset(
 
     source_ds = source_ds.select_variables(variables)
 
-    transformer = Transformer.from_crs(target_gm.crs, source_gm.crs)
-
     # pre-downscale when source is finer than target (reproject.py:129-137)
     source_ds, source_gm = _downscale_source_dataset(
         source_ds,
         source_gm,
         target_gm,
-        transformer,
         interp_methods,
         agg_methods,
         recover_nans,
@@ -375,19 +376,15 @@ def _downscale_source_dataset(
     source_ds: SparkDataset,
     source_gm: GridMapping,
     target_gm: GridMapping,
-    transformer: Transformer,
     interp_methods,
     agg_methods,
     recover_nans,
 ) -> tuple[SparkDataset, GridMapping]:
     """Clip + affine-downscale the source when it is finer than the target
     (reference reproject.py:338-382)."""
-    bbox_trans = transformer.transform_bounds(*target_gm.xy_bbox)
-    xres_trans = (bbox_trans[2] - bbox_trans[0]) / target_gm.width
-    yres_trans = (bbox_trans[3] - bbox_trans[1]) / target_gm.height
-    x_scale = source_gm.x_res / xres_trans
-    y_scale = source_gm.y_res / yres_trans
-    if x_scale < SCALE_LIMIT or y_scale < SCALE_LIMIT:
+    down = plan_pre_downscale(source_gm, target_gm)
+    if down is not None:
+        bbox_trans = down.bbox
         bbox_pad = (
             bbox_trans[0] - 2 * source_gm.x_res,
             bbox_trans[1] - 2 * source_gm.y_res,
@@ -397,13 +394,13 @@ def _downscale_source_dataset(
         source_ds, source_gm = clip_dataset_by_bbox(
             source_ds, source_gm, bbox_pad
         )
-        w = round(x_scale * source_gm.width)
-        h = round(y_scale * source_gm.height)
+        w = round(down.x_scale * source_gm.width)
+        h = round(down.y_scale * source_gm.height)
         downscaled_size = (w if w >= 2 else 2, h if h >= 2 else 2)
         downscale_target_gm = GridMapping.regular(
             size=downscaled_size,
             xy_min=(source_gm.xy_bbox[0], source_gm.xy_bbox[1]),
-            xy_res=(xres_trans, yres_trans),
+            xy_res=(down.x_res, down.y_res),
             crs=source_gm.crs,
         )
         source_ds = affine_transform_dataset(
@@ -494,10 +491,11 @@ def gather_interp_fused(
     Both inputs are bucketed by source j-block (target pixels by
     ``floor(iy) // B``, source rows by ``j // B`` with the first row of
     each block duplicated down so a ``floor/ceil`` stencil never crosses a
-    block edge), then ONE cogrouped ``applyInPandas`` evaluates the whole
+    block edge), then ONE cogrouped kernel evaluates the whole
     nearest/bilinear/triangular interpolation in numpy: two bucketing
     shuffles of unexpanded rows replace the 4-way neighbor explode + join
-    + pivot (which shuffled 4 x num_t rows per target pixel).
+    + pivot (which shuffled 4 x num_t rows per target pixel).  Source
+    rows are routed long (``blocks.route_long``), whatever ``num_t``.
 
     Value semantics are _gather_interp's exactly: nearest rounds
     half-to-even (``bround`` == ``np.rint``) and bounds-checks the rounded
@@ -545,54 +543,15 @@ def gather_interp_fused(
         )
     B = int(block_rows)
 
-    if num_t == 1:
-        vals = src_df.select("j", "i", F.col("value").alias("val_0"))
-    else:
-        vals = src_df.groupBy("j", "i").agg(
-            *[
-                F.max(F.when(F.col("t") == k, F.col("value")))
-                .alias(f"val_{k}")
-                for k in range(num_t)
-            ]
-        )
-    # Shuffle fewer bytes (the cogroup stage is shuffle-bound at 100x:
-    # 3.7 GB read + sort + Arrow ser/deser dominate its 160-225 s JVM
-    # CPU): (j, i) travel as ONE packed int64 (j * 2^31 + i -- both are
-    # non-negative 32-bit ints, so the packing is integer-exact and the
-    # kernel decode is two shifts), and the per-t presence booleans
-    # travel as ONE bit-packed int64 instead of num_t boolean columns
-    # (bool-column fallback above 62 t-slices).  One fewer field on the
-    # target rows, 1 + num_t fewer on the source rows.
-    packed_pres = num_t <= 62
+    # each source row belongs to block j // B and, if it is a block's
+    # first row, also to the block above (a floor/ceil stencil spans two
+    # rows)
     b = F.floor(F.col("j") / B).cast("int")
-    if packed_pres:
-        pres_cols = [
-            sum(
-                (
-                    F.when(F.col(f"val_{k}").isNotNull(),
-                           F.lit(1 << k).cast("bigint"))
-                    .otherwise(F.lit(0).cast("bigint"))
-                    for k in range(num_t)
-                ),
-                start=F.lit(0).cast("bigint"),
-            ).alias("pres")
-        ]
-    else:
-        pres_cols = [
-            F.col(f"val_{k}").isNotNull().alias(f"pres_{k}")
-            for k in range(num_t)
-        ]
-    src_b = vals.select(
-        (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
-         + F.col("i")).alias("sp"),
-        *[F.col(f"val_{k}") for k in range(num_t)],
-        *pres_cols,
-        F.explode(
-            F.when(
-                (F.col("j") % B == 0) & (F.col("j") >= B),
-                F.array(b, b - 1),
-            ).otherwise(F.array(b))
-        ).alias("blk"),
+    src_b = blocks.route_long(
+        src_df, num_t,
+        F.when((F.col("j") % B == 0) & (F.col("j") >= B), b - 1)
+        .otherwise(b),
+        b,
     )
     # Target pixels whose stencil can touch the source bucket to the
     # block owning their clipped source row.  Pixels ENTIRELY outside
@@ -608,8 +567,7 @@ def gather_interp_fused(
     n_blk = max(1, -(-src_h // B))
     iy_in = (F.col("iy") > F.lit(-1.0)) & (F.col("iy") < F.lit(float(src_h)))
     tgt_b = grid2d.select(
-        (F.col("j").cast("bigint") * F.lit(1 << 31).cast("bigint")
-         + F.col("i")).alias("tp"),
+        blocks.pack_ij().alias("tp"),
         "ix", "iy",
         F.when(
             iy_in,
@@ -632,36 +590,26 @@ def gather_interp_fused(
         ]
     )
 
-    def kernel(src_pdf, tgt_pdf):
-        n_tgt = len(tgt_pdf)
+    def kernel(src, tgt):
+        n_tgt = tgt.num_rows
         if n_tgt == 0:
-            return pd.DataFrame(
-                {f.name: [] for f in out_schema.fields}
+            return blocks.emit(
+                out_schema, {f.name: np.empty(0) for f in out_schema.fields}
             )
-        if len(src_pdf):
-            sp = src_pdf["sp"].to_numpy(np.int64)
-            sj_arr = sp >> 31
-            si_arr = sp & 0x7FFFFFFF
+        if src.num_rows:
+            sj_arr, si_arr = blocks.unpack_ij(blocks.read(src, "sp")[0])
             sj_lo = int(sj_arr.min())
             sj_n = int(sj_arr.max()) - sj_lo + 1
             V = np.full((num_t, sj_n, src_w), fill)
-            if packed_pres:
-                pres_bits = src_pdf["pres"].to_numpy(np.int64)
-            for k in range(num_t):
-                v = src_pdf[f"val_{k}"].to_numpy(np.float64)
-                if packed_pres:
-                    p = ((pres_bits >> k) & 1).astype(bool)
-                else:
-                    p_raw = src_pdf[f"pres_{k}"].to_numpy()
-                    p = np.where(
-                        pd.isna(p_raw), False, p_raw).astype(bool)
-                V[k, sj_arr - sj_lo, si_arr] = np.where(p, v, fill)
+            V[blocks.read(src, "t")[0], sj_arr - sj_lo, si_arr] = (
+                blocks.read(src, "value")[0]
+            )
         else:
             sj_lo, sj_n = 0, 1
             V = np.full((num_t, 1, src_w), fill)
 
-        ix_all = tgt_pdf["ix"].to_numpy(np.float64)
-        iy_all = tgt_pdf["iy"].to_numpy(np.float64)
+        ix_all = blocks.read(tgt, "ix")[0]
+        iy_all = blocks.read(tgt, "iy")[0]
 
         def corner(sj, si):
             ok = (
@@ -720,24 +668,12 @@ def gather_interp_fused(
                     o = np.trunc(o)
             out[:, s:e] = o
 
-        tp = tgt_pdf["tp"].to_numpy(np.int64)
-        tj = (tp >> 31).astype(np.int32)
-        ti = (tp & 0x7FFFFFFF).astype(np.int32)
-        return pd.DataFrame(
-            {
-                "t": np.repeat(np.arange(num_t, dtype=np.int32), n_tgt),
-                "j": np.tile(tj, num_t),
-                "i": np.tile(ti, num_t),
-                "value": out.reshape(num_t * n_tgt),
-            }
-        )
+        tj, ti = blocks.unpack_ij(blocks.read(tgt, "tp")[0])
+        return blocks.emit(out_schema, {
+            "t": np.repeat(np.arange(num_t, dtype=np.int32), n_tgt),
+            "j": np.tile(tj.astype(np.int32), num_t),
+            "i": np.tile(ti.astype(np.int32), num_t),
+            "value": out.reshape(num_t * n_tgt),
+        })
 
-    out = (
-        src_b.groupBy("blk")
-        .cogroup(tgt_b.groupBy("blk"))
-        .applyInPandas(lambda left, right: kernel(left, right), out_schema)
-    )
-    # Arrow hop NaN -> NULL restoration (operator contract is NaN)
-    return out.withColumn(
-        "value", F.coalesce(F.col("value"), F.lit(float("nan")))
-    )
+    return blocks.launch_cogroup(src_b, tgt_b, kernel, out_schema)

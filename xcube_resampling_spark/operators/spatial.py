@@ -8,10 +8,10 @@ from __future__ import annotations
 from ..constants import LOG
 from ..dataset import SparkDataset
 from ..gridmapping import GridMapping
+from ..plans import plan_resample
 from .affine import affine_transform_dataset
 from .rectify import rectify_dataset
 from .reproject import reproject_dataset
-from .utils import can_apply_affine_transform
 
 
 def resample_in_space(
@@ -36,44 +36,16 @@ def resample_in_space(
     """
     if source_gm is None:
         source_gm = source_ds.grid_mapping()
+    route = plan_resample(source_gm, target_gm).route
 
-    if not source_gm.is_regular:
-        return rectify_dataset(
-            source_ds,
-            target_gm=target_gm,
-            source_gm=source_gm,
-            variables=variables,
-            interp_methods=interp_methods,
-            agg_methods=agg_methods,
-            recover_nans=recover_nans,
-            fill_values=fill_values,
-            tile_size=tile_size,
-        )
-
-    if target_gm is None:
-        LOG.warning(
-            "If source grid mapping is regular `target_gm` must be given. "
-            "Source dataset is returned."
-        )
+    if route == "identity":
+        if target_gm is None:
+            LOG.warning(
+                "If source grid mapping is regular `target_gm` must be "
+                "given. Source dataset is returned."
+            )
         return source_ds
-    GridMapping.assert_regular(target_gm, name="target_gm")
-    if source_gm.is_close(target_gm):
-        return source_ds
-
-    if can_apply_affine_transform(source_gm, target_gm):
-        return affine_transform_dataset(
-            source_ds,
-            target_gm,
-            source_gm=source_gm,
-            variables=variables,
-            interp_methods=interp_methods,
-            agg_methods=agg_methods,
-            recover_nans=recover_nans,
-            fill_values=fill_values,
-        )
-    return reproject_dataset(
-        source_ds,
-        target_gm,
+    kwargs = dict(
         source_gm=source_gm,
         variables=variables,
         interp_methods=interp_methods,
@@ -81,3 +53,10 @@ def resample_in_space(
         recover_nans=recover_nans,
         fill_values=fill_values,
     )
+    if route == "rectify":
+        return rectify_dataset(
+            source_ds, target_gm=target_gm, tile_size=tile_size, **kwargs
+        )
+    if route == "affine":
+        return affine_transform_dataset(source_ds, target_gm, **kwargs)
+    return reproject_dataset(source_ds, target_gm, **kwargs)

@@ -17,6 +17,7 @@ decisions inspectable and testable independently of execution:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from ..constants import SCALE_LIMIT
 from ..crs import Transformer
@@ -34,6 +35,17 @@ class ResamplePlan:
     downscale_y: float = 1.0
 
 
+class PreDownscale(NamedTuple):
+    """A reprojection's pre-downscale: the source-to-target resolution
+    ratios, and the target's bbox and resolution in the source CRS."""
+
+    x_scale: float
+    y_scale: float
+    bbox: tuple[float, float, float, float]
+    x_res: float
+    y_res: float
+
+
 def plan_resample(
     source_gm: GridMapping, target_gm: GridMapping | None
 ) -> ResamplePlan:
@@ -42,6 +54,7 @@ def plan_resample(
         return ResamplePlan("rectify")
     if target_gm is None:
         return ResamplePlan("identity")
+    GridMapping.assert_regular(target_gm, name="target_gm")
     if source_gm.is_close(target_gm):
         return ResamplePlan("identity")
     if can_apply_affine_transform(source_gm, target_gm):
@@ -50,17 +63,17 @@ def plan_resample(
     return ResamplePlan(
         "reproject",
         pre_downscale=down is not None,
-        downscale_x=down[0] if down else 1.0,
-        downscale_y=down[1] if down else 1.0,
+        downscale_x=down.x_scale if down else 1.0,
+        downscale_y=down.y_scale if down else 1.0,
     )
 
 
 def plan_pre_downscale(
     source_gm: GridMapping, target_gm: GridMapping
-) -> tuple[float, float] | None:
+) -> PreDownscale | None:
     """Whether reprojection should downscale the source first
     (reference reproject.py:338-352: scales < SCALE_LIMIT trigger it).
-    Returns (x_scale, y_scale) or None."""
+    Returns the :class:`PreDownscale` or None."""
     transformer = Transformer.from_crs(target_gm.crs, source_gm.crs)
     bbox_trans = transformer.transform_bounds(*target_gm.xy_bbox)
     xres_trans = (bbox_trans[2] - bbox_trans[0]) / target_gm.width
@@ -68,8 +81,11 @@ def plan_pre_downscale(
     x_scale = source_gm.x_res / xres_trans
     y_scale = source_gm.y_res / yres_trans
     if x_scale < SCALE_LIMIT or y_scale < SCALE_LIMIT:
-        return (x_scale, y_scale)
+        return PreDownscale(
+            x_scale, y_scale, tuple(bbox_trans), xres_trans, yres_trans
+        )
     return None
 
 
-__all__ = ["ResamplePlan", "plan_resample", "plan_pre_downscale"]
+__all__ = ["PreDownscale", "ResamplePlan", "plan_resample",
+           "plan_pre_downscale"]
